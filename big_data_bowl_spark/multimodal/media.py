@@ -536,29 +536,39 @@ def _decode_png(payload: bytes) -> "np.ndarray":
         palette = np.frombuffer(plte, np.uint8).reshape(-1, 3)
     raw = zlib.decompress(bytes(idat))
 
-    samples = np.zeros(
-        (h, w, channels), np.uint16 if depth == 16 else np.uint8
-    )
     if interlace == 0:
-        rows, used = _png_unfilter(raw, 0, w, h, depth, channels)
-        if used != len(raw):
-            raise ValueError("PNG raster size mismatch")
-        samples = _png_unpack(rows, w, depth, channels)
+        passes = [(0, 0, 1, 1, w, h)]
     elif interlace == 1:  # Adam7
-        off = 0
+        passes = []
         for x0, y0, dx, dy in _PNG_ADAM7:
             pw = (w - x0 + dx - 1) // dx
             ph = (h - y0 + dy - 1) // dy
-            if pw <= 0 or ph <= 0:
-                continue
-            rows, used = _png_unfilter(raw, off, pw, ph, depth, channels)
-            off += used
-            sub = _png_unpack(rows, pw, depth, channels)
-            samples[y0::dy, x0::dx] = sub
-        if off != len(raw):
-            raise ValueError("PNG raster size mismatch")
+            if pw > 0 and ph > 0:
+                passes.append((x0, y0, dx, dy, pw, ph))
     else:
         raise ValueError(f"invalid PNG interlace method {interlace}")
+    # the filtered raster IHDR implies must be exactly the decompressed
+    # IDAT — checked BEFORE any header-sized allocation, so a bit-flipped
+    # width/height fails closed instead of requesting gigabytes
+    need = sum(
+        ph * (-(-(pw * depth * channels) // 8) + 1)
+        for _x0, _y0, _dx, _dy, pw, ph in passes
+    )
+    if need != len(raw):
+        raise ValueError("PNG raster size mismatch")
+
+    if interlace == 0:
+        rows, _used = _png_unfilter(raw, 0, w, h, depth, channels)
+        samples = _png_unpack(rows, w, depth, channels)
+    else:
+        samples = np.zeros(
+            (h, w, channels), np.uint16 if depth == 16 else np.uint8
+        )
+        off = 0
+        for x0, y0, dx, dy, pw, ph in passes:
+            rows, used = _png_unfilter(raw, off, pw, ph, depth, channels)
+            off += used
+            samples[y0::dy, x0::dx] = _png_unpack(rows, pw, depth, channels)
 
     if color == 3:
         rgb = palette[samples[:, :, 0]].astype(np.float64)

@@ -83,16 +83,19 @@ _TEST_PRED = f"NOT ({_TRAIN_PRED})"
 # partitioning-dependent tree variation.
 ACC_FLOOR = 0.9
 
-_CACHE: dict[str, tuple] = {}
+_CACHE: dict[tuple, tuple] = {}
 
 
 def _fitted(spark: SparkSession, sf_dir: str):
-    if sf_dir not in _CACHE:
+    # keyed on the lineitem fingerprint, like _TH_CACHE: data rewritten
+    # at the same path retrains instead of serving a stale model
+    key = data_fingerprint(sf_dir, "lineitem")
+    if key not in _CACHE:
         feats = order_features(spark, sf_dir)
-        _CACHE[sf_dir] = train_eval(
+        _CACHE[key] = train_eval(
             feats, FEATURE_COLS, label_col="label", id_cols=["l_orderkey"]
         )
-    return _CACHE[sf_dir]
+    return _CACHE[key]
 
 
 @register(

@@ -124,14 +124,25 @@ def shuffle_partition_target(spark: SparkSession) -> int:
     `spark.sql.shuffle.partitions` (ADVICE r17: three inline
     `int(conf.get("spark.sql.shuffle.partitions"))` copies silently
     diverged from the real target whenever initialPartitionNum was
-    configured). Cluster-tuned at scale, never a local constant."""
-    v = spark.conf.get(
+    configured). initialPartitionNum only counts while AQE AND its
+    coalescing are both on, and only when positive; otherwise the
+    exchange starts from shuffle.partitions. Cluster-tuned at scale,
+    never a local constant."""
+    conf = spark.conf
+    v = conf.get(
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         None,
     )
-    if v:
+    if (
+        v
+        and conf.get("spark.sql.adaptive.enabled").lower() == "true"
+        and conf.get(
+            "spark.sql.adaptive.coalescePartitions.enabled"
+        ).lower() == "true"
+        and int(v) > 0
+    ):
         return int(v)
-    return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return int(conf.get("spark.sql.shuffle.partitions"))
 
 
 def load_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -125,8 +125,19 @@ def test_compact_summary_bounded_and_parseable():
 
     from bench import compact_summary
 
-    for n in (0, 1, 104, 300):
-        line = compact_summary(_fake_result(n))
+    # the last input carries ten verbose regressions: not even the
+    # slowest timing fits, so shedding leaves no map at all
+    flooded = _fake_result(104, with_regressions=10)
+    for entry in flooded["regressions"].values():
+        entry.update(
+            isolated_sec=9.999,
+            isolated_ratio=9.99,
+            iso_ambient_factor=1.501,
+            isolated_ratio_corrected=6.66,
+        )
+    inputs = [(n, _fake_result(n)) for n in (0, 1, 104, 300)]
+    for n, result in inputs + [(104, flooded)]:
+        line = compact_summary(result)
         assert len(line) <= 1900, (n, len(line))
         s = json.loads(line)
         assert s["metric"] == "headline_queries_total"
@@ -134,19 +145,24 @@ def test_compact_summary_bounded_and_parseable():
         assert s["ambient_factor"] == 1.296
         assert s["n_queries"] == n
         assert s["queries_file"] == "bench_last.json"
+        # "no map" has one encoding: the key is absent, never {}
+        assert s.get("queries") != {}
         if n:
             # slowest-first: every included timing >= any excluded one
             # (r18: the map is named `queries` — the contract key the
             # driver's PERF comparator reads — with truncation counted
             # in queries_omitted, never silent)
-            assert s["queries"]
-            floor = min(s["queries"].values())
-            excluded = [
-                v for k, v in _fake_result(n)["queries"].items()
-                if k not in s["queries"]
-            ]
-            assert all(v <= floor for v in excluded)
-            omitted = n - len(s["queries"])
+            kept = s.get("queries", {})
+            if result is flooded:
+                assert "queries" not in s
+            else:
+                assert kept
+                floor = min(kept.values())
+                excluded = [
+                    v for k, v in result["queries"].items() if k not in kept
+                ]
+                assert all(v <= floor for v in excluded)
+            omitted = n - len(kept)
             if omitted:
                 assert s["queries_omitted"] == omitted
             else:

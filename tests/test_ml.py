@@ -485,3 +485,43 @@ def test_m13_registered_approx_invariants(spark, sf_dir):
             a = "R" if r.l_returnflag == "R" else "N"
             counts[a] = counts.get(a, 0) + 1
     assert {a: r.n_oob_rows for a, r in got.items()} == counts
+
+
+def test_forest_memo_retrains_on_rewritten_lineitem(spark, tmp_path):
+    """The m01/m02/m04/m07/m07b forest memo keys on the lineitem
+    fingerprint, not the bare sf_dir: rewriting lineitem at the SAME
+    path must retrain (the rewritten table adds a 'large' class the
+    first model never saw), while an unchanged table stays a memo
+    hit."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from big_data_bowl_spark.queries.ml import _fitted
+
+    def write(qty_per_order):
+        n = len(qty_per_order)
+        pq.write_table(
+            pa.table(
+                {
+                    "l_orderkey": pa.array(range(1, n + 1), pa.int64()),
+                    "l_partkey": pa.array(range(n), pa.int64()),
+                    "l_quantity": pa.array(qty_per_order, pa.float64()),
+                    "l_extendedprice": pa.array(
+                        [q * 10.0 for q in qty_per_order], pa.float64()
+                    ),
+                    "l_discount": pa.array([0.05] * n, pa.float64()),
+                }
+            ),
+            str(tmp_path / "lineitem.parquet"),
+        )
+
+    sf = str(tmp_path)
+    write([10.0 + (i % 2) * 80.0 for i in range(40)])  # small, medium
+    first = _fitted(spark, sf)
+    assert _fitted(spark, sf) is first
+    assert set(first[0].stages[0].labels) == {"small", "medium"}
+
+    write([10.0 + (i % 3) * 80.0 for i in range(60)])  # + large
+    second = _fitted(spark, sf)
+    assert second is not first
+    assert set(second[0].stages[0].labels) == {"small", "medium", "large"}

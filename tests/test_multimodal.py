@@ -2679,6 +2679,8 @@ def test_decode_dispatch_fails_closed_all_formats():
     truncated or bit-flipped payloads into ValueError (chaining the
     original as __cause__) — zlib.error, struct.error, IndexError,
     wave.Error and friends never escape to a Spark task."""
+    import struct
+
     import numpy as np
 
     from big_data_bowl_spark.multimodal.media import (
@@ -2726,6 +2728,13 @@ def test_decode_dispatch_fails_closed_all_formats():
         decode_payload(encode_png(img)[:30], "png", 11, 9)
     except ValueError as e:
         assert e.__cause__ is not None or "PNG" in str(e)
+    # header-inflated: IHDR claims ~2^31 x 2^31 over the 9x11 IDAT —
+    # must be rejected against the decompressed raster length, never
+    # allocated (MemoryError would escape _fail_closed on purpose)
+    png = bytearray(encode_png(img))
+    png[16:24] = struct.pack(">II", 0x7FFFFFF0, 0x7FFFFFF0)
+    with pytest.raises(ValueError):
+        decode_payload(bytes(png), "png", 11, 9)
 
 
 # ---------------------------------------------------------------------------

@@ -716,3 +716,53 @@ def test_digest_only_shuffles_stay_narrow(spark):
     a = audit_executed(ct_df)
     assert a["max_bytes_per_record"] <= 256, ("m11 contingency scan", a)
     assert a["spill_bytes"] == 0, ("m11 contingency scan", a)
+
+
+def test_shuffle_partition_target_gates_initial_partition_num(spark):
+    """initialPartitionNum is the starting target only while AQE and
+    its coalescing are both on and the value is positive; every other
+    combination falls back to spark.sql.shuffle.partitions."""
+    import types
+
+    from big_data_bowl_spark.sources.io import shuffle_partition_target
+
+    keys = (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        "spark.sql.shuffle.partitions",
+    )
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    cases = [
+        # (aqe, coalesce, initialPartitionNum, expected)
+        ("true", "true", None, 7),
+        ("true", "true", "13", 13),
+        ("false", "true", "13", 7),
+        ("true", "false", "13", 7),
+        ("false", "false", "13", 7),
+    ]
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "7")
+        for aqe, coalesce, initial, want in cases:
+            spark.conf.set(keys[0], aqe)
+            spark.conf.set(keys[1], coalesce)
+            if initial is None:
+                spark.conf.unset(keys[2])
+            else:
+                spark.conf.set(keys[2], initial)
+            got = shuffle_partition_target(spark)
+            assert got == want, (aqe, coalesce, initial, got)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+    # conf.set refuses a non-positive initialPartitionNum, so a
+    # stand-in conf covers the int(v) > 0 gate
+    for initial in ("0", "-3"):
+        stub = types.SimpleNamespace(
+            conf=dict(zip(keys, ("true", "true", initial, "7")))
+        )
+        assert shuffle_partition_target(stub) == 7, initial

@@ -87,13 +87,13 @@ PIPELINES = [
     # round-10 batch 2: the round's registrations (j13's exact-recall
     # pairs are density-squared under the replica lake — see TABLES
     # note; d12's delta join, n24's candidate-only calibration and
-    # t34's MapState fold should all be plan-stable)
+    # t34's per-type count fold should all be plan-stable)
     "j13_fuzzy_match_deletion_blocking",
     "t34_stateful_type_counts",
     "d12_incremental_lsh_maintenance",
     "n24_minhash_calibration",
-    # round-10 batch 3: timer sessionization (O(1) state + one timer
-    # per key; the fold is the only data-sized stage)
+    # round-10 batch 3: timeout sessionization (O(1) state + one
+    # event-time timeout per key; the fold is the only data-sized stage)
     "t35_timer_closed_sessions",
     # round-10 batch 4: scan-bound audits (2-row / 5-row outputs)
     "o13_temporal_split",
@@ -463,8 +463,8 @@ def main() -> None:
         "--keys-query",
         default="t35_timer_closed_sessions",
         help="which stateful query the --t35-keys lake drives "
-        "(t34_stateful_type_counts probes the MapState axis: FACTORx "
-        "keys => FACTORx live per-user sub-maps)",
+        "(t34_stateful_type_counts probes the per-type-count axis: "
+        "FACTORx keys => FACTORx live (user, type) count keys)",
     )
     ap.add_argument(
         "--fuzzy-buckets",

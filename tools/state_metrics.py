@@ -93,7 +93,7 @@ def main() -> None:
         W.LAST_STATE_METRICS.clear()
         try:
             REGISTRY[name].fn(spark, args.sf).collect()
-        except Exception as ex:  # skip capability-gated shapes
+        except Exception as ex:  # report a failed drain, keep going
             print(json.dumps({"query": name, "err": str(ex)[:140]}))
             continue
         drains = []
