@@ -148,6 +148,10 @@ def connected_components(
         # sym stays EAGER: it is referenced by labels AND the check
         # join, and a lazy sym would let the two branches race to
         # compute the whole upstream LSH chain twice inside one job.
+        # labels itself is read by BOTH check branches below (lu and
+        # lv) and nothing materializes it first, so that one job can
+        # compute it twice; what repeats is the aggregate over the
+        # eager sym checkpoint, never the upstream LSH chain.
         .localCheckpoint(eager=False)
     )
     # Converged-at-init fast path (r15): LSH near-dup graphs are

@@ -1022,7 +1022,6 @@ def t21_streaming_stream_stream_join(spark: SparkSession, sf_dir: str):
         joined,
         "t21_stream_stream_sink",
         output_mode="append",
-        n_partitions=8,
     )
     return spark.table("t21_stream_stream_sink")
 
@@ -1400,7 +1399,6 @@ def e06_streaming_pipeline(spark: SparkSession, sf_dir: str):
         _e06_agg(spark, sf_dir),
         "e06_streaming_pipeline_sink",
         output_mode="append",
-        n_partitions=8,
     )
     return spark.table("e06_streaming_pipeline_sink")
 
@@ -1448,7 +1446,6 @@ def t24_streaming_merge_sink(spark: SparkSession, sf_dir: str):
         _e06_agg(spark, sf_dir),
         path,
         keys=["window_start", "event_type"],
-        n_partitions=8,
     )
     return spark.read.parquet(path).select(
         "window_start", "window_end", "event_type", "n_active"
@@ -1485,7 +1482,6 @@ def t25_stateful_running_stats(spark: SparkSession, sf_dir: str):
         running_user_stats_legacy(stream),
         "t25_stats_sink",
         output_mode="append",
-        n_partitions=8,
     )
     sink = spark.table("t25_stats_sink")
     # the upsert step: per user keep the max-n_events emission
@@ -1538,7 +1534,6 @@ def t25b_stateful_running_stats_us(spark: SparkSession, sf_dir: str):
         running_user_stats_legacy(stream),
         "t25b_stats_sink",
         output_mode="append",
-        n_partitions=8,
     )
     sink = spark.table("t25b_stats_sink")
     return (
@@ -1589,7 +1584,6 @@ def t26_streaming_histogram(spark: SparkSession, sf_dir: str):
         stream,
         "t26_streaming_histogram_sink",
         output_mode="complete",
-        n_partitions=8,
     )
     return spark.table("t26_streaming_histogram_sink")
 
@@ -1751,7 +1745,6 @@ def t29_streaming_topk(spark: SparkSession, sf_dir: str):
         stream,
         "t29_streaming_topk_sink",
         output_mode="complete",
-        n_partitions=8,
     )
     counts = spark.table("t29_streaming_topk_sink")
     w = _W.partitionBy("window_start").orderBy(
@@ -1993,7 +1986,6 @@ def t33_streaming_reach(spark: SparkSession, sf_dir: str):
         firsts,
         "t33_streaming_reach_sink",
         output_mode="complete",
-        n_partitions=8,
     )
     hourly = (
         spark.table("t33_streaming_reach_sink")
@@ -2044,7 +2036,6 @@ def t34_stateful_type_counts(spark: SparkSession, sf_dir: str):
         per_type_counts_legacy(stream),
         "t34_counts_sink",
         output_mode="append",
-        n_partitions=8,
     )
     sink = spark.table("t34_counts_sink")
     # upsert: counts strictly increase across a key's emissions
@@ -2127,7 +2118,6 @@ def t35_timer_closed_sessions(spark: SparkSession, sf_dir: str):
         timer_closed_sessions_legacy(stream, gap_minutes=_T35_GAP_MIN),
         "t35_sessions_sink",
         output_mode="append",
-        n_partitions=8,
     )
     sink = spark.table("t35_sessions_sink")
     # timestamps materialized in-plan from the LONG emissions — the

@@ -121,7 +121,6 @@ def run_to_merge_snapshot(
     stream_df: DataFrame,
     path: str,
     keys: list,
-    n_partitions: int | None = None,
 ) -> None:
     """Drain a bounded stream through the idempotent MERGE sink: each
     micro-batch upserts into the parquet snapshot at ``path`` keyed by
@@ -135,7 +134,7 @@ def run_to_merge_snapshot(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         merge_batch_into_snapshot(spark, batch_df, path, keys, batch_id)
 
-    with batch_shuffle_partitions(spark, n_partitions):
+    with batch_shuffle_partitions(spark):
         q = (
             stream_df.writeStream.foreachBatch(apply_batch)
             .outputMode("append")

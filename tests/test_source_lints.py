@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import ast
 import pathlib
+import re
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent / "big_data_bowl_spark"
 
@@ -258,3 +259,25 @@ def test_streaming_audit_lists_cover_every_draining_query():
         f"the queries that actually drain: "
         f"{set(state_checked) ^ draining}"
     )
+
+
+def test_no_hardcoded_checkout_path():
+    """Every script finds the repository from its own ``__file__``: a
+    literal checkout path on ``sys.path`` makes a run from any other
+    checkout import (and time) the engine at that path instead of its
+    own."""
+    # split so this file does not match its own pattern
+    literal = re.compile(r"[\"']/root" r"/repo\b")
+    repo = ROOT.parent
+    files = [
+        *sorted(ROOT.rglob("*.py")),
+        *sorted((repo / "tools").rglob("*.py")),
+        repo / "bench.py",
+    ]
+    bad = [
+        f"{p.relative_to(repo)}:{i}"
+        for p in files
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if literal.search(line)
+    ]
+    assert not bad, bad

@@ -245,7 +245,7 @@ def test_stream_stream_join_matches_across_microbatches(
         read().filter(F.col("event_type") == "purchase"),
         horizon="2 hours",
     )
-    run_to_memory(joined, "ss_join_sink", "append", n_partitions=4)
+    run_to_memory(joined, "ss_join_sink", "append")
     got = [
         (r.click_id, r.purchase_id, r.user_id, r.purchase_value)
         for r in spark.table("ss_join_sink").collect()

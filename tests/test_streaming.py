@@ -358,8 +358,10 @@ def test_streaming_state_is_key_bounded(spark, sf_dir):
     streaming dedup holds one row per (user, type) key; the
     timer-closed sessionizer's live+evicted total accounts for every
     user exactly once (timers fire and evict as the availableNow
-    watermark passes). tools/state_metrics.py prints the full-family
-    table (recorded in SCALE.md)."""
+    watermark passes). Each drain's state store is sized to one task
+    wave (numShufflePartitions == the session's task slots).
+    tools/state_metrics.py prints the full-family table (recorded in
+    SCALE.md)."""
     from pyspark.sql import functions as F
 
     from big_data_bowl_spark.queries import REGISTRY
@@ -378,6 +380,12 @@ def test_streaming_state_is_key_bounded(spark, sf_dir):
         REGISTRY[name].fn(spark, sf_dir).collect()
         ops = [op for _, opl in W.LAST_STATE_METRICS for op in opl]
         assert ops, f"{name}: no stateOperators captured"
+        # one task wave per micro-batch: the state store has one
+        # partition per task slot, not a fixed count
+        slots = spark.sparkContext.defaultParallelism
+        assert [op["numShufflePartitions"] for op in ops] == [
+            slots
+        ] * len(ops)
         return ops
 
     # one session state row per user

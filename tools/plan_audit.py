@@ -14,10 +14,12 @@ from __future__ import annotations
 import argparse
 import contextlib
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 _JOIN_LABELS = [
@@ -701,7 +703,7 @@ def main() -> None:
     out = "\n".join(lines) + "\n"
     print(out)
     if args.write:
-        with open("/root/repo/PLANS.md", "w") as f:
+        with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
             f.write(out)
 
 
