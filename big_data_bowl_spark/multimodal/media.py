@@ -310,6 +310,23 @@ def _bmp_palette_lut(
     ).astype(np.uint8)
 
 
+# Largest canvas the BMP RLE decoders allocate (256 MiB of palette
+# indices, as much again after the palette lookup). The header's size
+# cannot be checked against the stream: delta, end-of-line and
+# end-of-bitmap codes let a few bytes cover any canvas.
+_BMP_RLE_MAX_PIXELS = 1 << 28
+
+
+def _bmp_rle_canvas(w: int, h: int) -> "np.ndarray":
+    """Zeroed (h, w) palette-index canvas; a header-inflated size is
+    a ValueError, never an allocation."""
+    import numpy as np
+
+    if w * h > _BMP_RLE_MAX_PIXELS:
+        raise ValueError(f"BMP RLE canvas {w}x{h} exceeds the pixel bound")
+    return np.zeros((h, w), np.uint8)
+
+
 def _decode_bmp_rle8(
     payload: bytes, data_offset: int, hdr_size: int, w: int, h: int
 ) -> "np.ndarray":
@@ -322,7 +339,7 @@ def _decode_bmp_rle8(
 
     bottom_up = h > 0
     h = abs(h)
-    idx = np.zeros((h, w), np.uint8)
+    idx = _bmp_rle_canvas(w, h)
     x = y = 0
     pos = data_offset
     while pos + 1 < len(payload) and y < h:
@@ -368,7 +385,7 @@ def _decode_bmp_rle4(
 
     bottom_up = h > 0
     h = abs(h)
-    idx = np.zeros((h, w), np.uint8)
+    idx = _bmp_rle_canvas(w, h)
     x = y = 0
     pos = data_offset
     while pos + 1 < len(payload) and y < h:

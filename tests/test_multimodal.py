@@ -2735,6 +2735,25 @@ def test_decode_dispatch_fails_closed_all_formats():
     png[16:24] = struct.pack(">II", 0x7FFFFFF0, 0x7FFFFFF0)
     with pytest.raises(ValueError):
         decode_payload(bytes(png), "png", 11, 9)
+    # header-inflated RLE canvases (~1.1 KB files): the decoders must
+    # reject the header's size before allocating, not escape as
+    # MemoryError (2^31-1 squared) or ask for 1.49 GiB (40000 squared)
+    for bpp, compression, colors in ((8, 1, 256), (4, 2, 16)):
+        palette = b"".join(bytes([i, i, i, 0]) for i in range(colors))
+        rle = bytes([4, 1, 0, 0, 0, 1])  # a run, end of line, end
+        data_offset = 14 + 40 + len(palette)
+        for side in (0x7FFFFFFF, 40000):
+            bmp = (
+                b"BM"
+                + struct.pack("<IHHI", data_offset + len(rle), 0, 0, data_offset)
+                + struct.pack("<Iii", 40, side, side)
+                + struct.pack("<HHI", 1, bpp, compression)
+                + struct.pack("<IiiII", len(rle), 0, 0, colors, 0)
+                + palette
+                + rle
+            )
+            with pytest.raises(ValueError, match="RLE canvas"):
+                decode_payload(bmp, "bmp", 11, 9)
 
 
 # ---------------------------------------------------------------------------

@@ -6,15 +6,20 @@ Prints one JSON line per query:
   {"name": ..., "construct_s": ..., "execute_s": ...,
    "jobs_construct": N, "jobs_execute": N}
 
-Job counts come from the status tracker's job-id high-water mark, so
-they include every eager action a query's fn() runs (localCheckpoint
-materializations, convergence isEmpty probes, collects) plus the
-checkpoint fill-in jobs the lazy variants schedule. Measurement-only
-tool (guide §1): nothing here feeds results back into the queries.
+Each construct and execute call runs under its own job tag, and its
+jobs are the ones the status tracker files under that tag: every eager
+action a query's fn() runs (localCheckpoint materializations,
+convergence isEmpty probes, collects), the checkpoint fill-in jobs the
+lazy variants schedule, and the micro-batch jobs of the streams it
+drains. A job group would miss those last ones: a stream runs its
+batches under its own group (the run id), but inherits the tags of the
+thread that starts it. Measurement-only tool (guide §1): nothing here
+feeds results back into the queries.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import sys
@@ -37,12 +42,20 @@ def main() -> None:
 
     spark = get_spark()
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
+    tracker = sc._jsc.sc().statusTracker()
+    tags = itertools.count()
 
-    def job_count() -> int:
-        ids = tracker.getJobIdsForGroup(None) or []
-        # high-water mark: job ids are monotonically increasing ints
-        return (max(ids) + 1) if ids else 0
+    def counted(call):
+        """(result, wall s, jobs) of `call()` run under a fresh job tag."""
+        tag = f"census-{next(tags)}"
+        sc.addJobTag(tag)
+        try:
+            t0 = time.time()
+            out = call()
+            wall = time.time() - t0
+        finally:
+            sc.removeJobTag(tag)
+        return out, wall, len(tracker.getJobIdsForTag(tag))
 
     for name in args.names:
         fn = REGISTRY[name].fn
@@ -51,22 +64,16 @@ def main() -> None:
         best = None
         for _ in range(args.runs):
             sc.setJobDescription(f"census:{name}")
-            j0 = job_count()
-            t0 = time.time()
-            df = fn(spark, args.sf)
-            t1 = time.time()
-            j1 = job_count()
-            n = df.count()
-            t2 = time.time()
-            j2 = job_count()
+            df, construct_s, jobs_construct = counted(lambda: fn(spark, args.sf))
+            n, execute_s, jobs_execute = counted(df.count)
             sc.setJobDescription(None)
             row = {
                 "name": name,
-                "construct_s": round(t1 - t0, 3),
-                "execute_s": round(t2 - t1, 3),
-                "total_s": round(t2 - t0, 3),
-                "jobs_construct": j1 - j0,
-                "jobs_execute": j2 - j1,
+                "construct_s": round(construct_s, 3),
+                "execute_s": round(execute_s, 3),
+                "total_s": round(construct_s + execute_s, 3),
+                "jobs_construct": jobs_construct,
+                "jobs_execute": jobs_execute,
                 "rows": n,
             }
             if best is None or row["total_s"] < best["total_s"]:
